@@ -4372,26 +4372,11 @@ WHERE measurement_subject = 'user_3' AND measurement_of = 'value'
 GROUP BY 1 ORDER BY 1
 """
     # Q4: per-subject slice is ~60 rows at every sf (users scale with
-    # sf, per-user density doesn't) ⇒ count ≤ 360 ⇒ bucket = 60 s;
-    # deterministic mode (ties → smallest value). Reference parity:
-    # the slice keeps NULL strings (they're counted in phase 1 and a
-    # bucket of only-NULLs emits a NULL mode); NULL groups rank last.
-    q4 = f"""
-WITH sliced AS (
-  SELECT {bucket.format(w=60)} AS time, measurement_string
-  FROM {cond} c
-  WHERE measurement_subject = 'user_5' AND measurement_of = 'event_type'
-    AND {in_range}
-), counted AS (
-  SELECT time, measurement_string, COUNT(*) AS cnt
-  FROM sliced GROUP BY 1, 2
-)
-SELECT time, measurement_string AS most_common_value
-FROM counted
-QUALIFY row_number() OVER (PARTITION BY time
-  ORDER BY (measurement_string IS NULL) ASC, cnt DESC, measurement_string ASC) = 1
-ORDER BY time
-"""
+    # sf, per-user density doesn't) ⇒ count ≤ 360 ⇒ bucket = 60 s; the
+    # shared oracle still runs the reference's phase-1 COUNT to pick it
+    q4 = oc.most_frequent_value_oracle(
+        cond, "user_5", "event_type", _SQL_START, _SQL_END
+    )
     # Q5: bucket = span/360 = 7200 s; semantics pinned in
     # operators/timeweight.py and mirrored here exactly.
     q5_base = f"""

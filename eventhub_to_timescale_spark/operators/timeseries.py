@@ -8,9 +8,22 @@ counterpart, and returns a DataFrame with stable, aliased column names.
 Scale design notes (local-test ≠ target: these run against a 100 TB
 time-partitioned table):
 - Each query starts with equality predicates on dimension columns plus
-  a timestamp BETWEEN — expressed FIRST so Catalyst pushes them into
-  the parquet scan (partition pruning on the date partition ≙
-  TimescaleDB chunk exclusion; row-group min/max ≙ its indexes).
+  a timestamp BETWEEN — expressed FIRST (``_slice``) so Catalyst pushes
+  them into the parquet scan (row-group min/max ≙ TimescaleDB's
+  indexes). Chunk exclusion is a separate predicate: when the frame
+  carries the store's ``date`` partition column (written as
+  ``to_date(timestamp)`` by the sinks), ``_slice`` adds
+  ``date BETWEEN to_date(start) AND to_date(end)``, which Spark folds
+  to date literals and applies as a partition filter, so only the
+  queried days' directories are listed and opened. A frame without
+  ``date`` (nothing to prune) gets the same answer. ``date`` is
+  computed in the session time zone, so pruning is exact only for a
+  store written and queried under the same session time zone — the
+  engine's session pins UTC.
+- Every panel answer is small (≤ a few hundred rows), so where the
+  input to the final ORDER BY is already bounded the sort runs in one
+  task (``_sorted_answer``) instead of a range-partitioned global sort,
+  which would cost a sampling job plus an extra exchange per query.
 - Bucketing uses flat epoch-floor arithmetic (one codegen'd column),
   so the groupBy key is a single 8-byte value — map-side partial
   aggregation applies, and the shuffle carries one bucket per
@@ -23,13 +36,16 @@ time-partitioned table):
 
 from __future__ import annotations
 
+import operator
 from datetime import datetime
+from functools import reduce
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from eventhub_to_timescale_spark.functions.scalars import epoch_bucket
 from eventhub_to_timescale_spark.plans.adaptive import (
+    MODE_COUNT_THRESHOLD,
     adaptive_mode_bucket_seconds,
     daily_branch_bucket_seconds,
 )
@@ -41,16 +57,35 @@ def _slice(
     of: str | None,
     start: datetime,
     end: datetime,
+    *also: Column,
 ) -> DataFrame:
     """Common dimension + time-range predicate block (every reference
-    query's WHERE, e.g. db/get_aggregated_data_by_interval.sql:19-24).
-    Expressed before anything else so it reaches the scan."""
-    out = df.filter(F.col("timestamp").between(start, end))
+    query's WHERE, e.g. db/get_aggregated_data_by_interval.sql:19-24),
+    plus any query-specific predicates ``also``. Expressed before
+    anything else so it reaches the scan; on a frame with the store's
+    ``date`` partition the day range prunes partitions (chunk
+    exclusion, see the module notes). One ``filter`` call: each
+    DataFrame step is analyzed eagerly, about 15 ms of driver time per
+    step on a 4-vCPU VM."""
+    preds = [F.col("timestamp").between(start, end), *also]
+    if dict(df.dtypes).get("date") == "date":
+        preds.append(
+            F.col("date").between(F.to_date(F.lit(start)), F.to_date(F.lit(end)))
+        )
     if subject is not None:
-        out = out.filter(F.col("measurement_subject") == subject)
+        preds.append(F.col("measurement_subject") == subject)
     if of is not None:
-        out = out.filter(F.col("measurement_of") == of)
-    return out
+        preds.append(F.col("measurement_of") == of)
+    return df.filter(reduce(operator.and_, preds))
+
+
+def _sorted_answer(df: DataFrame, *cols: str) -> DataFrame:
+    """A panel's final ORDER BY, sorted in a single task. Only for an
+    input already bounded by its slice (one series, ≤ a few hundred
+    rows): it skips the range-partitioning sample job and exchange of
+    a global ``orderBy``, but ``coalesce(1)`` also collapses the stage
+    that produces its input into one task."""
+    return df.coalesce(1).sortWithinPartitions(*cols)
 
 
 # ---------------------------------------------------------------------------
@@ -69,12 +104,11 @@ def aggregated_by_interval(
 ) -> DataFrame:
     """→ (time, avg_value) per origin-aligned bucket, ordered by time."""
     sliced = _slice(conditions, subject, of, start, end)
-    return (
+    return _sorted_answer(
         sliced.groupBy(
             epoch_bucket(F.col("timestamp"), interval_seconds).alias("time")
-        )
-        .agg(F.avg("measurement_number").alias("avg_value"))
-        .orderBy("time")
+        ).agg(F.avg("measurement_number").alias("avg_value")),
+        "time",
     )
 
 
@@ -125,10 +159,11 @@ def aggregated_by_day(
     sliced = _slice(conditions, subject, of, start, end)
     bucket = daily_branch_bucket_seconds(start, end)
     if bucket is None:
-        return (
-            sliced.groupBy(F.date_trunc("day", F.col("timestamp")).alias("time"))
-            .agg(F.max("measurement_number").alias("max_value"))
-            .orderBy("time")
+        return _sorted_answer(
+            sliced.groupBy(
+                F.date_trunc("day", F.col("timestamp")).alias("time")
+            ).agg(F.max("measurement_number").alias("max_value")),
+            "time",
         )
     day = F.date_trunc("day", F.col("timestamp"))
     sec_of_day = (
@@ -138,10 +173,11 @@ def aggregated_by_day(
         F.unix_micros(day) / F.lit(1_000_000.0)
         + F.floor(sec_of_day / F.lit(bucket)) * F.lit(bucket)
     )
-    return (
-        sliced.groupBy(bucket_start.alias("time"))
-        .agg(F.avg("measurement_number").alias("avg_value"))
-        .orderBy("time")
+    return _sorted_answer(
+        sliced.groupBy(bucket_start.alias("time")).agg(
+            F.avg("measurement_number").alias("avg_value")
+        ),
+        "time",
     )
 
 
@@ -158,8 +194,14 @@ def most_frequent_value(
     start: datetime,
     end: datetime,
 ) -> DataFrame:
-    """Two-phase: COUNT the slice (driver action), pick bucket width,
-    then deterministic mode of ``measurement_string`` per bucket.
+    """Two-phase in one plan: ``count(*) over ()`` on the slice picks
+    one of the two widths ``adaptive_mode_bucket_seconds`` can return
+    (60 s, or span/360 above ``MODE_COUNT_THRESHOLD`` rows), then the
+    deterministic mode of ``measurement_string`` per bucket. Calling
+    this runs no Spark job; the count runs when the answer is
+    collected. Its unpartitioned window gathers the (bounded) slice
+    into one task, and the per-bucket grouping and ranking above it
+    reuse that partitioning with no further exchange.
 
     Mode is made deterministic — ties broken by smallest value — via
     count + row_number rather than ``F.mode`` (whose tie-break is
@@ -175,12 +217,17 @@ def most_frequent_value(
     bucket.
     """
     sliced = _slice(conditions, subject, of, start, end)
-    n = sliced.count()  # phase 1 (reference :15-23), pre-null-filter
-    bucket = adaptive_mode_bucket_seconds(n, start, end)
+    # phase 1 (reference :15-23): COUNT(*) of the slice, NULL strings
+    # included; the only widths it can select are known up front
+    n = F.count(F.lit(1)).over(Window.partitionBy())
+    dense = adaptive_mode_bucket_seconds(MODE_COUNT_THRESHOLD + 1, start, end)
+    sparse = adaptive_mode_bucket_seconds(MODE_COUNT_THRESHOLD, start, end)
+    bucket = F.when(n > MODE_COUNT_THRESHOLD, F.lit(dense)).otherwise(F.lit(sparse))
 
     counted = (
-        sliced.groupBy(
-            epoch_bucket(F.col("timestamp"), bucket).alias("time"),
+        sliced.withColumn("_bucket", bucket)
+        .groupBy(
+            epoch_bucket(F.col("timestamp"), F.col("_bucket")).alias("time"),
             F.col("measurement_string"),
         )
         .agg(F.count(F.lit(1)).alias("cnt"))
@@ -190,11 +237,11 @@ def most_frequent_value(
         F.desc("cnt"),
         F.asc("measurement_string"),
     )
-    return (
+    return _sorted_answer(
         counted.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
-        .select("time", F.col("measurement_string").alias("most_common_value"))
-        .orderBy("time")
+        .select("time", F.col("measurement_string").alias("most_common_value")),
+        "time",
     )
 
 
@@ -210,11 +257,11 @@ def unique_subjects(
     start: datetime,
     end: datetime,
 ) -> DataFrame:
-    return (
+    return _sorted_answer(
         _slice(conditions, None, of, start, end)
         .select("measurement_subject")
-        .distinct()
-        .orderBy("measurement_subject")
+        .distinct(),
+        "measurement_subject",
     )
 
 
@@ -223,13 +270,21 @@ def unique_subjects(
 # ---------------------------------------------------------------------------
 
 
+def _sorted_by_subject(df: DataFrame, subject: str | None, *cols: str) -> DataFrame:
+    """Q8/Q9's final ORDER BY: one task when ``subject`` bounds the
+    slice to one series; otherwise a global (range-partitioned) sort,
+    whose exchange keeps the per-subject windows below it parallel."""
+    if subject is None:
+        return df.orderBy(*cols)
+    return _sorted_answer(df, *cols)
+
+
 def changed_rows(
     conditions: DataFrame,
     subject: str | None,
     of: str,
     start: datetime,
     end: datetime,
-    keep_order_col: bool = False,
 ) -> DataFrame:
     """Keep rows whose ``measurement_string`` differs (null-safely) from
     the previous row of the same subject (reference LAG :23-26 +
@@ -239,6 +294,23 @@ def changed_rows(
     keeps it unless its own value is also NULL — so a NULL-valued
     first row is dropped, exactly like the reference (no special
     first-row escape)."""
+    return _sorted_by_subject(
+        _change_points(conditions, subject, of, start, end),
+        subject,
+        "measurement_subject",
+        "timestamp",
+    )
+
+
+def _change_points(
+    conditions: DataFrame,
+    subject: str | None,
+    of: str,
+    start: datetime,
+    end: datetime,
+    keep_order_col: bool = False,
+) -> DataFrame:
+    """``changed_rows`` before its final sort."""
     sliced = _slice(conditions, subject, of, start, end)
     order_cols = ["timestamp"]
     if "measurement_unique_id" in conditions.columns:
@@ -260,7 +332,6 @@ def changed_rows(
         sliced.withColumn("prev_value", prev)
         .filter(~F.col("measurement_string").eqNullSafe(F.col("prev_value")))
         .select(*keep)
-        .orderBy("measurement_subject", "timestamp")
     )
 
 
@@ -284,23 +355,27 @@ def state_intervals(
     ``close_at`` (reference uses ``now()`` :36 — parameterized here so
     results are deterministic/testable; None → current_timestamp).
     """
-    changes = changed_rows(conditions, subject, of, start, end, keep_order_col=True)
+    changes = _change_points(
+        conditions, subject, of, start, end, keep_order_col=True
+    )
     # order the lead by (timestamp, uid) when available: change rows
     # sharing a timestamp otherwise pair (value, timeEnd)
     # nondeterministically
     order_cols = ["timestamp", "_ord"] if "_ord" in changes.columns else ["timestamp"]
     w = Window.partitionBy("measurement_subject").orderBy(*order_cols)
     close = F.lit(close_at) if close_at is not None else F.current_timestamp()
-    return (
-        changes.withColumn("timeEnd", F.coalesce(F.lead("timestamp").over(w), close))
-        .drop("_ord")
-        .select(
+    return _sorted_by_subject(
+        changes.withColumn(
+            "timeEnd", F.coalesce(F.lead("timestamp").over(w), close)
+        ).select(
             F.col("timestamp").alias("time"),
             "timeEnd",
             "measurement_subject",
             "value",
-        )
-        .orderBy("measurement_subject", "time")
+        ),
+        subject,
+        "measurement_subject",
+        "time",
     )
 
 

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from eventhub_to_timescale_spark.functions.scalars import epoch_bucket
+from eventhub_to_timescale_spark.operators.timeseries import _slice, _sorted_answer
 from eventhub_to_timescale_spark.plans.adaptive import resolution_bucket_seconds
 
 METHOD_LOCF = "locf"
@@ -55,11 +56,8 @@ def time_weighted_average(
         raise ValueError(f"method must be locf|linear, got {method!r}")
     bucket_s = resolution_bucket_seconds(start, end, resolution)
 
-    sliced = (
-        conditions.filter(F.col("timestamp").between(start, end))
-        .filter(F.col("measurement_subject") == subject)
-        .filter(F.col("measurement_of") == of)
-        .filter(F.col("measurement_number").isNotNull())
+    sliced = _slice(
+        conditions, subject, of, start, end, F.col("measurement_number").isNotNull()
     )
     epoch = F.unix_micros(F.col("timestamp")) / F.lit(1_000_000.0)
     cols = [
@@ -111,4 +109,4 @@ def time_weighted_average(
                 .alias("time_weighted_value"),
             )
         )
-    return agg.orderBy("dt")
+    return _sorted_answer(agg, "dt")

@@ -17,6 +17,7 @@ from eventhub_to_timescale_spark.operators.text import (
     _PUNCT_RE,
     _TOKEN_RE,
 )
+from eventhub_to_timescale_spark.plans.adaptive import MODE_COUNT_THRESHOLD
 
 
 def _h32(expr: str, seed: str = "") -> str:
@@ -464,6 +465,41 @@ SELECT doc_id,
        CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
        sha256(text) AS sha256
 FROM documents
+"""
+
+
+def most_frequent_value_oracle(
+    cond: str, subject: str, of: str, start_sql: str, end_sql: str
+) -> str:
+    """Q4 (operators/timeseries.py:most_frequent_value) as the
+    reference's two phases: COUNT(*) of the slice — NULL strings
+    included — then span/360 buckets (rounded half-up to whole seconds,
+    at least 1) above ``MODE_COUNT_THRESHOLD`` rows, else 60 s; per
+    bucket the most frequent string, ties to the smallest, NULL groups
+    last. ``start_sql``/``end_sql`` are DuckDB TIMESTAMP expressions."""
+    return f"""
+WITH sliced AS (
+  SELECT timestamp, measurement_string
+  FROM {cond} c
+  WHERE measurement_subject = '{subject}' AND measurement_of = '{of}'
+    AND timestamp BETWEEN {start_sql} AND {end_sql}
+), width AS (
+  SELECT CASE WHEN COUNT(*) > {MODE_COUNT_THRESHOLD}
+              THEN greatest(1, floor((epoch({end_sql}) - epoch({start_sql}))
+                                     / 360.0 + 0.5))
+              ELSE 60 END AS w
+  FROM sliced
+), counted AS (
+  SELECT make_timestamp(CAST(floor(epoch(timestamp) / w) * w AS BIGINT)
+                        * 1000000) AS time,
+         measurement_string, COUNT(*) AS cnt
+  FROM sliced, width GROUP BY 1, 2
+)
+SELECT time, measurement_string AS most_common_value
+FROM counted
+QUALIFY row_number() OVER (PARTITION BY time
+  ORDER BY (measurement_string IS NULL) ASC, cnt DESC, measurement_string ASC) = 1
+ORDER BY time
 """
 
 

@@ -11,15 +11,23 @@ Several reference query functions size their time bucket at call time:
   match, else 60 s
   (db/get_most_frequent_value_by_time_interval.sql:15-30)
 
-These are *driver-side* decisions (an action, then plan construction) —
-no Catalyst extension needed (SURVEY §4). At 100 TB the Q4 count is a
-metadata-cheap scan of one (subject, of) slice with predicate pushdown;
-it does not materialize rows.
+Q2 and Q3 depend only on the span, so the width is a driver-side
+constant chosen at plan construction — no Catalyst extension needed
+(SURVEY §4). Q4's count is data, but it can select only the two widths
+``adaptive_mode_bucket_seconds`` returns for a span, so
+``operators.timeseries.most_frequent_value`` computes both up front
+and picks between them inside the plan with ``count(*) over ()`` on
+the slice: no eager COUNT action and no Spark job at call time; the
+count runs with the rest of the query, over the one (subject, of)
+slice gathered into a single task.
 """
 
 from __future__ import annotations
 
 from datetime import datetime
+
+# Q4 switches to span/360 buckets when MORE than this many rows match
+MODE_COUNT_THRESHOLD = 360
 
 
 def span_seconds(start: datetime, end: datetime) -> float:
@@ -62,7 +70,7 @@ def adaptive_mode_bucket_seconds(matching_count: int, start: datetime, end: date
     variable — a numeric→int cast that rounds to nearest (ties away
     from zero) — so bucket width is a whole second; fractional spans
     round the same way here."""
-    if matching_count > 360:
+    if matching_count > MODE_COUNT_THRESHOLD:
         # max(1,...): dense sub-6-minute slices would otherwise round
         # the width to 0 and NULL every bucket key
         return float(max(1, int(span_seconds(start, end) / 360.0 + 0.5)))

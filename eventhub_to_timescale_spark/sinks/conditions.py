@@ -20,8 +20,14 @@ Validation-as-filter: rows violating the required-field contract
 channel rather than raising.
 
 Scale design: parquet sink partitioned by event date ≙ hypertable
-chunking on ``timestamp`` (reference db/create_table_and_roles.sql:59);
-time-range queries then prune partitions exactly like chunk exclusion.
+chunking on ``timestamp`` (reference db/create_table_and_roles.sql:59).
+A filter on ``timestamp`` alone does not prune those partitions; the
+panel queries get chunk exclusion from the ``date BETWEEN
+to_date(start) AND to_date(end)`` predicate that
+``operators.timeseries._slice`` adds whenever the frame carries the
+``date`` column. ``date`` is ``to_date(timestamp)`` in the writing
+session's time zone, so that pruning is exact only for stores written
+under the engine's UTC session (``session.get_spark``).
 The reference's 8 secondary indexes are replaced by parquet row-group
 min/max stats + predicate pushdown. ``measurement_unique_id`` uses
 ``monotonically_increasing_id`` (non-contiguous, unlike the

@@ -3,8 +3,12 @@ sequence + ``conditions`` table + 8 indexes + hypertable conversion +
 roles; teardown in cleanup_table_and_roles.sql).
 
 Spark mapping (SURVEY §2.1 S8):
-- hypertable time-chunking  → parquet table PARTITIONED BY (date):
-  time-range predicates prune partitions exactly like chunk exclusion;
+- hypertable time-chunking  → parquet table PARTITIONED BY (date),
+  ``date = to_date(timestamp)`` in the session time zone; the panel
+  queries prune it like chunk exclusion through the ``date`` range
+  predicate ``operators.timeseries._slice`` derives from their
+  ``timestamp`` window (a ``timestamp`` filter alone prunes nothing),
+  exact for stores written under the engine's UTC session;
 - 8 secondary indexes       → parquet row-group min/max statistics +
   predicate pushdown (no index maintenance cost at ingest);
 - sequence surrogate key    → ``monotonically_increasing_id`` at write

@@ -126,11 +126,20 @@ def write_conditions_stream(
     parquet partitioned by date; the batch id makes re-delivered
     batches overwrite their own files (at-least-once → effectively
     exactly-once on re-run), mirroring what an UPSERT on
-    (correlation_id, measurement_of) does on the JDBC path."""
+    (correlation_id, measurement_of) does on the JDBC path.
+
+    Column metadata is dropped before the write: the stream's event-time
+    column carries its watermark delay (``spark.watermarkDelayMs``) as
+    metadata, which would otherwise be stored in every file's Spark
+    schema and make every batch plan over the store treat ``timestamp``
+    as a watermarked column."""
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
+        plain = batch_df.select(
+            *[batch_df[c].alias(c, metadata={}) for c in batch_df.columns]
+        )
         (
-            batch_df.withColumn("date", F.to_date("timestamp"))
+            plain.withColumn("date", F.to_date("timestamp"))
             .withColumn("_batch_id", F.lit(batch_id))
             .write.mode("overwrite")
             .option(
